@@ -17,7 +17,6 @@ import re
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 _FENCE_RE = re.compile(r"^\s*```(?:json)?\s*|\s*```\s*$", re.MULTILINE)
@@ -94,9 +93,3 @@ def repair_json_column(col: Column) -> Column:
     (UDF built lazily — pandas_udf registration needs an active session.)
     """
     return pandas_udf(_repair_batch, "string")(col)
-
-
-def repaired_map(col: Column) -> Column:
-    """Repair then parse to MapType(string,string) — the reference's
-    service-id → reason response maps (predictions.py:201-290)."""
-    return F.from_json(repair_json_column(col), "map<string,string>")

@@ -11,21 +11,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def decode_map(col: Column, mapping: dict[str, str], default: Column | str | None = None) -> Column:
-    """CASE value decode (eligibility_enhanced.sql:17-44 marital/id-type;
-    eligibility.py:631-638 gender/marital dicts with passthrough default).
-
-    ``default=None`` passes the input through unchanged (dict.get(x, x)).
-    """
-    out = None
-    for raw, label in mapping.items():
-        cond = col == raw
-        out = F.when(cond, label) if out is None else out.when(cond, label)
-    if default is None:
-        return out.otherwise(col)
-    return out.otherwise(default if isinstance(default, Column) else F.lit(default))
-
-
 def parse_timestamp_multi(col: Column, formats: list[str]) -> Column:
     """F4: multi-format timestamp parse, NULL if nothing matches
     (eligibility.py:297-314 change_date; lch_eligibility.py:84-94).
@@ -51,37 +36,3 @@ def age_years(born: Column, anchor: Column) -> Column:
         (F.month(anchor) == F.month(born)) & (F.dayofmonth(anchor) < F.dayofmonth(born))
     )
     return (year_diff - F.when(before_birthday, 1).otherwise(0)).cast("long")
-
-
-def coalesce_conflict(primary: Column, alternate: Column) -> Column:
-    """P10: name_conflict column coalescing (eligibility.py:158-176) —
-    fill the primary column from its alternate-generation twin."""
-    return F.coalesce(primary, alternate)
-
-
-def safe_long(col: Column) -> Column:
-    """P12: ``pd.to_numeric(errors="coerce").astype("Int64")`` →
-    try_cast to BIGINT, NULL on garbage (eligibility.py:256-259)."""
-    return col.cast("string").try_cast("long")
-
-
-def normalize_key(col: Column) -> Column:
-    """F12: join-key normalization ``.str.strip().str.lower()``."""
-    return F.lower(F.trim(col))
-
-
-def full_name(*parts: Column) -> Column:
-    """F1: CONCAT of name parts, null-skipping (eligibility_enhanced.sql:13)."""
-    return F.concat_ws(" ", *parts)
-
-
-def strip_markdown_fences(col: Column) -> Column:
-    """F10: remove ```json fences around LLM output (predictions.py:170-176)."""
-    return F.regexp_replace(
-        F.regexp_replace(col, r"^\s*```(?:json)?\s*", ""), r"\s*```\s*$", ""
-    )
-
-
-def contains_word(col: Column, word: str) -> Column:
-    """F10: whole-word search (``\\bapproved\\b``, predictions.py:179-191)."""
-    return col.rlike(rf"\b{word}\b")

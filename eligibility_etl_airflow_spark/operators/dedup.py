@@ -43,28 +43,6 @@ def keep_first(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFr
     )
 
 
-def label_duplicates(
-    df: DataFrame,
-    keys: list[str],
-    order_by: list[Column],
-    label_col: str = "dup_label",
-    label: str = "Duplicated Service",
-    keep_label: str = "ok",
-) -> DataFrame:
-    """Label (not drop) every non-first row per key group — the outpatient
-    duplicate auto-reject (predictions.py:244-253) as pure column logic."""
-    w = Window.partitionBy(*keys).orderBy(*[c.asc() for c in order_by])
-    return df.withColumn(
-        label_col,
-        F.when(F.row_number().over(w) > 1, label).otherwise(keep_label),
-    )
-
-
-def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Full-row (or column-subset) exact dedup — hash aggregate, one shuffle."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
-
 def dedup_repeated_segments(
     df: DataFrame,
     id_col: str = "doc_id",

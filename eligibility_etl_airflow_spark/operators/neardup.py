@@ -35,16 +35,6 @@ from eligibility_etl_airflow_spark.operators.parallel import (  # noqa: E402
 )
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of the normalized text. Convenience
-    for small relations / ad-hoc use: the inline normalize re-evaluates
-    once per shingle position inside the transform lambda — on a hot
-    path, stage ``_with_normalized_text`` and use
-    ``hashed_shingles_of_norm`` (see its docstring for the measured
-    cost)."""
-    return string_shingles_of_norm(normalize_text(col), k)
-
-
 def hashed_shingles_of_norm(norm: Column, k: int = 5) -> Column:
     """Distinct 64-bit-hashed character k-shingles of ALREADY-NORMALIZED
     text. Set ops over long arrays are ~5× cheaper than over string

@@ -60,11 +60,6 @@ def token_count_bpe(col: Column) -> Column:
     return F.regexp_count(col, F.lit(TOKEN_REGEX)).cast("long")
 
 
-def word_occurrences(col: Column, word: str) -> Column:
-    """Whole-word occurrence count (used by marker scoring)."""
-    return F.regexp_count(col, F.lit(rf"\b{word}\b")).cast("long")
-
-
 def punct_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(r"[^\w\s]")).cast("long")
 

@@ -54,9 +54,12 @@ def xxh64_u8mat(mat: np.ndarray, seed: int = 42) -> np.ndarray:
     """XXH64 of each ROW of an (n, L) uint8 matrix → (n,) int64 (the
     JVM's signed view of the u64 hash). All rows share one length L, so
     the whole stripe/tail structure is compile-time-fixed and every op
-    vectorizes across rows."""
+    vectorizes across rows. Raises ``ValueError`` unless ``mat`` is 2-D
+    (a 1-D array would otherwise read as n empty rows)."""
     mat = np.ascontiguousarray(mat, dtype=np.uint8)
-    n, length = mat.shape if mat.ndim == 2 else (mat.shape[0], 0)
+    if mat.ndim != 2:
+        raise ValueError(f"xxh64_u8mat needs an (n, L) matrix, got shape {mat.shape}")
+    n, length = mat.shape
     s = np.uint64(seed)
     with np.errstate(over="ignore"):
         if length >= 32:

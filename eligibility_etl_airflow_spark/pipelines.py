@@ -20,17 +20,255 @@ lines and XCom record counts.
 from __future__ import annotations
 
 import os
+from functools import reduce
+from typing import Callable, NamedTuple
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eligibility_etl_airflow_spark import registry
+from eligibility_etl_airflow_spark.operators import drift as drift_ops
+from eligibility_etl_airflow_spark.operators.components import _stable
 from eligibility_etl_airflow_spark.sources import sinks
 
 
 def _query(name: str):
     registry.load_all()
     return registry.QUERIES[name]
+
+
+class _Stage(NamedTuple):
+    """One gate of a funnel. ``fn(current) -> survivors`` keeps the
+    gate's own join (semi on keep-ids, anti on drop-ids); ``name`` is the
+    drop reason the audit/quarantine trail records; ``stats_key`` names
+    the survivor count in the returned stats (None: not counted).
+    ``persist=False`` leaves a cheap map stage uncached."""
+
+    name: str
+    stats_key: str | None
+    fn: Callable[[DataFrame], DataFrame]
+    persist: bool = True
+
+
+def _drop(ids: Callable[[DataFrame], DataFrame], id_col: str = "doc_id"):
+    """Stage fn removing the rows whose id ``ids(current)`` lists."""
+    return lambda cur: cur.join(ids(cur), id_col, "left_anti")
+
+
+def _keep(ids: Callable[[DataFrame], DataFrame], id_col: str = "doc_id"):
+    """Stage fn keeping only the rows whose id ``ids(current)`` lists."""
+    return lambda cur: cur.join(ids(cur), id_col, "left_semi")
+
+
+def _fold(stages: list[_Stage], df: DataFrame) -> DataFrame:
+    """The stages as one lazy plan: no persist, no count."""
+    return reduce(lambda cur, stage: stage.fn(cur), stages, df)
+
+
+class _Funnel:
+    """The chain of gates the batch pipelines share. Each stage's
+    survivors are persisted and counted once — the count materializes
+    the cache every later stage (and the final write) reads, so the
+    source scan runs once — and kept as a snapshot. Anti-joins of
+    consecutive snapshots give the drop trail: every dropped row
+    attributed to the FIRST stage that removed it, drops plus final
+    survivors partitioning the source (each anti-join probes a cache;
+    the source end costs one id-pruned re-scan). As a context manager it
+    unpersists every cache it made on exit."""
+
+    def __init__(self) -> None:
+        self.stats: dict = {}
+        self.snapshots: list[tuple[str, DataFrame]] = []
+        self._caches: list[DataFrame] = []
+
+    def __enter__(self) -> _Funnel:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in self._caches:
+            df.unpersist()
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._caches.append(df)
+        return df
+
+    def start(self, source: DataFrame, stats_key: str = "n_total") -> None:
+        self.stats[stats_key] = source.count()
+        self.snapshots = [("source", source)]
+
+    @property
+    def current(self) -> DataFrame:
+        return self.snapshots[-1][1]
+
+    def run(self, stages: list[_Stage]) -> DataFrame:
+        for stage in stages:
+            out = stage.fn(self.current)
+            if stage.persist:
+                out = self.cache(out)
+            if stage.stats_key is not None:
+                self.stats[stage.stats_key] = out.count()
+            self.snapshots.append((stage.name, out))
+        return self.current
+
+    def drops(
+        self,
+        id_col: str,
+        reason_col: str,
+        extra: Callable[[DataFrame], list] = lambda prev: [],
+    ) -> DataFrame:
+        """One (id_col, *extra(prev), reason_col) row per dropped row,
+        the reason being the name of the stage that dropped it."""
+        return reduce(
+            DataFrame.unionByName,
+            [
+                prev.select(id_col, *extra(prev))
+                .join(cur.select(id_col), id_col, "left_anti")
+                .withColumn(reason_col, F.lit(name))
+                for (_, prev), (name, cur) in zip(self.snapshots, self.snapshots[1:])
+            ],
+        )
+
+
+def _robots_stages(
+    url_col: str,
+    robots_df: DataFrame | None,
+    domain_col: str,
+    text_col: str,
+    agent: str,
+    key: str,
+) -> list[_Stage]:
+    """Robots.txt admission (operators/robots.py), empty without
+    ``robots_df``: pages the site's rules disallow for ``agent`` drop
+    first — a compliant crawler never fetched them."""
+    if robots_df is None:
+        return []
+    from eligibility_etl_airflow_spark.operators import robots as robots_ops
+
+    rules = robots_ops.robots_rules(robots_df, domain_col, text_col, agent=agent)
+    return [
+        _Stage(
+            "robots_disallowed",
+            "n_after_robots",
+            lambda cur: robots_ops.robots_allowed(cur, url_col, rules, key=key)
+            .filter(F.col("crawl_allowed"))
+            .drop("crawl_allowed", "matched_pattern"),
+        )
+    ]
+
+
+def _url_stages(id_col: str, url_col: str) -> list[_Stage]:
+    """Canonicalize (malformed URLs drop) then keep the min-id record per
+    canonical form — two crawls differing only by tracking params /
+    default port / fragment are one page."""
+    from eligibility_etl_airflow_spark.operators import urls
+
+    return [
+        _Stage(
+            "malformed_url",
+            None,
+            lambda cur: urls.url_components(cur, url_col).filter(
+                F.col("url_canonical").isNotNull()
+            ),
+            persist=False,
+        ),
+        _Stage(
+            "url_duplicate",
+            "n_after_url_dedup",
+            _keep(
+                lambda cur: cur.groupBy("url_canonical")
+                .agg(F.min(id_col).alias(id_col))
+                .select(id_col),
+                id_col,
+            ),
+        ),
+    ]
+
+
+def _crawl_clean_stages(
+    cache: Callable[[DataFrame], DataFrame],
+    id_col: str,
+    html_col: str,
+    line_max_df: int,
+    nfc: bool,
+    blocklist_terms: tuple[str, ...] | None,
+    blocklist_max_fraction: float,
+    min_latin_fraction: float | None,
+    max_mojibake_per_kchar: float | None = None,
+) -> list[_Stage]:
+    """HTML → clean text: strip (newline-preserving) + line-level
+    boilerplate removal + NFC, then the optional blocklist, script and
+    mojibake gates. ``cache`` persists the stripped text, which
+    line_dedup reads through TWO subtrees (the line-frequency aggregate
+    and the join probe) — without it the strip_html regexp chain, the
+    dominant map cost at crawl scale, would run twice."""
+    from eligibility_etl_airflow_spark.operators import dedup, text
+
+    def strip_and_dedup_lines(cur: DataFrame) -> DataFrame:
+        texted = cache(
+            cur.select(
+                id_col,
+                "url_canonical",
+                F.col("url_domain").alias("domain"),
+                text.strip_html(F.col(html_col), collapse_ws=False).alias("text"),
+            )
+        )
+        lined = dedup.line_dedup(texted, id_col, "text", max_line_df=line_max_df)
+        rebuilt = (
+            texted.drop("text")
+            .join(lined.select(id_col, "text_clean"), id_col)
+            .filter(F.trim(F.col("text_clean")) != "")
+            .withColumnRenamed("text_clean", "text")
+        )
+        if nfc:
+            return rebuilt.withColumn("text", text.unicode_nfc(F.col("text")))
+        return rebuilt
+
+    stages = [_Stage("boilerplate_empty", "n_after_line_dedup", strip_and_dedup_lines)]
+    if blocklist_terms is not None:
+        stages.append(_Stage("blocklist", "n_after_blocklist", _drop(
+            lambda cur: text.blocklist_metrics(
+                cur, id_col, "text",
+                terms=blocklist_terms, max_fraction=blocklist_max_fraction,
+            ).filter(~F.col("keep")).select(id_col),
+            id_col,
+        )))
+    if min_latin_fraction is not None:
+        stages.append(_Stage("script_gate", "n_after_script", _keep(
+            lambda cur: cur.select(id_col, *text.script_profile(F.col("text")))
+            .filter(F.col("frac_latin") >= min_latin_fraction)
+            .select(id_col),
+            id_col,
+        )))
+    if max_mojibake_per_kchar is not None:
+        # double-encoded text is valid UTF-8, so byte-level triage cannot
+        # catch it — the cp1252-signature density does
+        stages.append(_Stage("mojibake_gate", "n_after_mojibake", _keep(
+            lambda cur: text.mojibake_metrics(
+                cur, id_col, "text", max_per_kchar=max_mojibake_per_kchar
+            ).filter(F.col("keep")).select(F.col("id").alias(id_col)),
+            id_col,
+        )))
+    return stages
+
+
+def _documents_table(df: DataFrame, id_col: str, *extra: str) -> DataFrame:
+    """The crawl tiers' output contract — a full documents table (lang
+    via the marker heuristic, source = registered domain, n_chars), so a
+    crawl output is directly a curation / training-prep input."""
+    from eligibility_etl_airflow_spark.operators import text
+
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        "text",
+        text.lang_id(F.col("text")).alias("lang"),
+        F.col("domain").alias("source"),
+        F.length("text").cast("long").alias("n_chars"),
+        "url_canonical",
+        "domain",
+        *extra,
+    )
 
 
 def run_eligibility_pipeline(
@@ -74,8 +312,17 @@ def run_resubmission_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) ->
     """§3.2 lifecycle: two-branch union extract with latest-transaction
     window dedup → per-visit justification → MERGE upsert into the final
     table (stage+MERGE of src/etl_utils.py:87-145, here a parquet MERGE)."""
+    from eligibility_etl_airflow_spark.operators.dedup import keep_last
+
     df = _query("resubmission_flagship")(spark, sf_dir)
-    deduped = sinks.keep_last(df, ["service_id"], order_col="request_date")
+    # latest request wins; the trailing columns make the order total, so
+    # tied request_dates resolve the same way on every run. (request_id,
+    # sequence) can repeat in the source, hence price and state as well
+    order = [
+        "request_date", "request_id", "sequence", "justification_type",
+        "service_price", "response_state",
+    ]
+    deduped = keep_last(df, ["service_id"], [F.col(c) for c in order])
     sinks.merge_upsert(spark, os.path.join(out_dir, "resubmission"), deduped, ["service_id"])
     return {"rows_upserted": deduped.count()}
 
@@ -198,7 +445,7 @@ def run_corpus_curation_pipeline(
     files. Stats are aggregate counts only — nothing data-proportional
     reaches the driver.
 
-    Funnel-count discipline: ``filtered`` and ``exact_kept`` are
+    Funnel-count discipline: every stage's survivors (``_Funnel``) are
     persisted before their counts, so the documents scan (and its
     quality-regex work) runs ONCE — every downstream stage (the hash
     keeper, the LSH near-dup stage, the anti-join, the clustered write)
@@ -206,8 +453,6 @@ def run_corpus_curation_pipeline(
     on the parquet source (footer metadata, no column IO) and
     ``n_curated`` is counted from the written sink's own footers, so
     neither triggers a recompute of the funnel lineage."""
-    from pyspark import StorageLevel
-
     from eligibility_etl_airflow_spark.catalog import Catalog
     from eligibility_etl_airflow_spark.operators import neardup, text
 
@@ -227,338 +472,213 @@ def run_corpus_curation_pipeline(
             "the per-pair anti-join keeps minima by construction and would "
             "silently ignore quality"
         )
+    if fluency_cut is not None and not (0.0 < fluency_cut < 1.0):
+        raise ValueError(f"fluency_cut must be in (0, 1), got {fluency_cut}")
+
+    def doc_embeddings() -> DataFrame:
+        # docs without an embedding row get no flag/drop row, so they
+        # survive the embedding stages' anti-joins by construction
+        if embeddings is not None:
+            return embeddings
+        return Catalog(spark, sf_dir).embeddings.select(
+            F.col("vec_id").alias("doc_id"), "embedding"
+        )
 
     # ``documents`` overrides the catalog table — the seam that chains
     # this funnel onto a previous stage's output (e.g.
     # run_crawl_preprocess_pipeline's documents.parquet) or any
     # caller-built relation with (doc_id, text, lang) columns
     docs = documents if documents is not None else Catalog(spark, sf_dir).documents
-    # ``lang_model`` (a train_softmax_classifier dict) re-identifies the
-    # language from the TEXT — the learned char-n-gram classifier
-    # replaces whatever the source metadata claimed, which is the
-    # production posture (crawl-provided lang tags are unreliable). The
-    # language-mix filter below then runs on the predicted label. Pure
-    # column arithmetic + one broadcast weight join (score_softmax); a
-    # doc the scorer can't featurize keeps the model's prior.
-    lang_scored = None
-    if lang_model is not None:
-        from eligibility_etl_airflow_spark.operators import (
-            quality_model as _qm_ops,
-        )
+    with _Funnel() as f:
+        # ``lang_model`` (a train_softmax_classifier dict) re-identifies
+        # the language from the TEXT — the learned char-n-gram classifier
+        # replaces whatever the source metadata claimed, which is the
+        # production posture (crawl-provided lang tags are unreliable).
+        # The language-mix filter below then runs on the predicted label.
+        # Pure column arithmetic + one broadcast weight join
+        # (score_softmax); a doc the scorer can't featurize keeps the
+        # model's prior.
+        if lang_model is not None:
+            from eligibility_etl_airflow_spark.operators import (
+                quality_model as _qm_ops,
+            )
 
-        pred = _qm_ops.score_softmax(docs, "doc_id", "text", lang_model).select(
-            F.col("id").alias("doc_id"),
-            F.col("pred_label").alias("_pred_lang"),
-        )
-        # persisted: the scoring subtree (char-gram explode + two aggs +
-        # broadcast weight join) would otherwise re-run for n_total, the
-        # quality/lang filter, AND every audit-snapshot anti-join — the
-        # same one-scan discipline as `filtered` below
-        docs = (
-            docs.join(pred, "doc_id", "left")
-            .withColumn("lang", F.coalesce("_pred_lang", F.col("lang")))
-            .drop("_pred_lang")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        lang_scored = docs
-    n_total = docs.count()
-    # audit trail: (stage_name, surviving relation) snapshots; consecutive
-    # anti-joins reconstruct which stage dropped each doc (opt-in)
-    snapshots: list = [("source", docs)]
+            pred = _qm_ops.score_softmax(docs, "doc_id", "text", lang_model).select(
+                F.col("id").alias("doc_id"),
+                F.col("pred_label").alias("_pred_lang"),
+            )
+            # persisted: the scoring subtree (char-gram explode + two
+            # aggs + broadcast weight join) would otherwise re-run for
+            # n_total, the quality/lang filter, AND every audit anti-join
+            docs = f.cache(
+                docs.join(pred, "doc_id", "left")
+                .withColumn("lang", F.coalesce("_pred_lang", F.col("lang")))
+                .drop("_pred_lang")
+            )
+        f.start(docs)
 
-    filtered = docs.filter(
-        (text.quality_score(F.col("text")) >= min_quality)
-        & (F.col("lang").isin(*langs))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    exact_kept = None
-    hygiene_caches: list[DataFrame] = []
-    hygienic = filtered
-    try:
-        n_filtered = filtered.count()  # materializes the one documents scan
-        snapshots.append(("quality_lang", filtered))
-
-        # optional corpus hygiene, both reading the cache (no re-scan):
-        # repetition filter drops looping/stuffed docs; decontamination
-        # drops docs sharing any 8-gram with the provided eval set.
-        # Each stage persists its OUTPUT (same discipline as filtered/
-        # exact_kept) so its token-explode/n-gram subtree runs once —
-        # the stage count materializes the cache, and every downstream
-        # consumer (next stage, keeper agg, semi join) reads it.
-        n_after_repetition = n_after_decontam = n_after_blocklist = None
+        # the first stage persists the one documents scan (and its
+        # quality-regex work); every later stage reads the cache before
+        # it. Optional hygiene tiers, cheapest first: the C4 "bad words"
+        # blocklist (one map-only regexp pass; drop side selected so
+        # null-text docs, keep=True by contract, survive), repetition,
+        # n-gram then embedding decontamination, the fluency cut, the
+        # learned quality gate.
+        stages = [
+            _Stage(
+                "quality_lang",
+                "n_after_quality_lang",
+                lambda cur: cur.filter(
+                    (text.quality_score(F.col("text")) >= min_quality)
+                    & (F.col("lang").isin(*langs))
+                ),
+            )
+        ]
         if blocklist_terms is not None:
-            # cheapest hygiene tier first: one map-only regexp pass over
-            # the cached relation (operators/text.py::blocklist_metrics —
-            # the C4 "bad words" stage); drop side selected so null-text
-            # docs (keep=True by contract) survive
-            drop_ids = (
-                text.blocklist_metrics(
-                    hygienic,
-                    "doc_id",
-                    "text",
-                    terms=blocklist_terms,
-                    max_fraction=blocklist_max_fraction,
-                )
-                .filter(~F.col("keep"))
-                .select("doc_id")
-            )
-            hygienic = hygienic.join(drop_ids, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            hygiene_caches.append(hygienic)
-            n_after_blocklist = hygienic.count()
-            snapshots.append(("blocklist", hygienic))
+            stages.append(_Stage("blocklist", "n_after_blocklist", _drop(
+                lambda cur: text.blocklist_metrics(
+                    cur, "doc_id", "text",
+                    terms=blocklist_terms, max_fraction=blocklist_max_fraction,
+                ).filter(~F.col("keep")).select("doc_id")
+            )))
         if repetition_filter:
             from eligibility_etl_airflow_spark.operators import repetition
 
-            keep_ids = (
-                repetition.repetition_metrics(hygienic)
+            stages.append(_Stage("repetition", "n_after_repetition", _keep(
+                lambda cur: repetition.repetition_metrics(cur)
                 .filter(F.col("keep"))
                 .select("doc_id")
-            )
-            hygienic = hygienic.join(keep_ids, "doc_id", "left_semi").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            hygiene_caches.append(hygienic)
-            n_after_repetition = hygienic.count()
-            snapshots.append(("repetition", hygienic))
+            )))
         if decontam_bench is not None:
             from eligibility_etl_airflow_spark.operators import decontam
 
-            dirty_ids = (
-                decontam.contamination_flags(hygienic, decontam_bench)
+            stages.append(_Stage("decontam_ngram", "n_after_decontam", _drop(
+                lambda cur: decontam.contamination_flags(cur, decontam_bench)
                 .filter(F.col("contaminated"))
                 .select("doc_id")
-            )
-            hygienic = hygienic.join(dirty_ids, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            hygiene_caches.append(hygienic)
-            n_after_decontam = hygienic.count()
-            snapshots.append(("decontam_ngram", hygienic))
-        n_after_semantic_decontam = None
+            )))
         if semantic_decontam_bench is not None:
             from eligibility_etl_airflow_spark.operators import similarity
 
-            # corpus side: the survivors' embeddings (doc without an
-            # embedding row → no flag row → survives the anti-join)
-            corpus_emb = (
-                embeddings
-                if embeddings is not None
-                else Catalog(spark, sf_dir).embeddings.select(
-                    F.col("vec_id").alias("doc_id"), "embedding"
-                )
-            ).join(hygienic.select("doc_id"), "doc_id", "left_semi")
-            flagged = (
-                similarity.semantic_decontam_flags(
-                    corpus_emb,
-                    semantic_decontam_bench,
-                    id_col="doc_id",
-                    threshold=semantic_decontam_threshold,
-                )
-                .filter(F.col("contaminated") == 1)
-                .select("doc_id")
-            )
-            hygienic = hygienic.join(flagged, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            hygiene_caches.append(hygienic)
-            n_after_semantic_decontam = hygienic.count()
-            snapshots.append(("decontam_semantic", hygienic))
-        n_after_fluency = None
+            stages.append(_Stage(
+                "decontam_semantic", "n_after_semantic_decontam", _drop(
+                    lambda cur: similarity.semantic_decontam_flags(
+                        doc_embeddings().join(cur.select("doc_id"), "doc_id", "left_semi"),
+                        semantic_decontam_bench,
+                        id_col="doc_id",
+                        threshold=semantic_decontam_threshold,
+                    )
+                    .filter(F.col("contaminated") == 1)
+                    .select("doc_id")
+                ),
+            ))
         if fluency_cut is not None:
-            if not (0.0 < fluency_cut < 1.0):
-                raise ValueError(
-                    f"fluency_cut must be in (0, 1), got {fluency_cut}"
-                )
             from eligibility_etl_airflow_spark.operators import lm
 
-            # persisted: the scoring lineage (tokenize + model join +
-            # per-doc aggregate) feeds BOTH the cutoff aggregate and the
-            # drop-id filter — same run-once discipline as every stage
-            scores = lm.unigram_nll_scores(hygienic, "doc_id", "text").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            hygiene_caches.append(scores)
-            # one aggregate finds the cut; only the scalar reaches the
-            # driver (approx sketch — exact percentile would sort)
-            cutoff = scores.agg(
-                F.percentile_approx("mean_nll", 1.0 - fluency_cut).alias("c")
-            ).collect()[0]["c"]
-            # anti-join on the docs ABOVE the cut: token-less docs have
-            # no score row and must survive (a semi join on the keep set
-            # would silently drop them regardless of the cut fraction);
-            # an empty score relation (cutoff None) then drops nothing
-            drop_ids = scores.filter(
-                F.col("mean_nll") > F.lit(cutoff)
-                if cutoff is not None
-                else F.lit(False)
-            ).select(F.col("id").alias("doc_id"))
-            hygienic = hygienic.join(drop_ids, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            hygiene_caches.append(hygienic)
-            n_after_fluency = hygienic.count()
-            snapshots.append(("fluency_cut", hygienic))
+            def fluency_drops(cur: DataFrame) -> DataFrame:
+                # persisted: the scoring lineage (tokenize + model join +
+                # per-doc aggregate) feeds BOTH the cutoff aggregate and
+                # the drop ids
+                scores = f.cache(lm.unigram_nll_scores(cur, "doc_id", "text"))
+                # one aggregate finds the cut; only the scalar reaches
+                # the driver (approx sketch — exact percentile would sort)
+                cutoff = scores.agg(
+                    F.percentile_approx("mean_nll", 1.0 - fluency_cut).alias("c")
+                ).collect()[0]["c"]
+                # the docs ABOVE the cut: token-less docs have no score
+                # row and must survive; an empty score relation (cutoff
+                # None) drops nothing
+                return scores.filter(
+                    F.col("mean_nll") > F.lit(cutoff)
+                    if cutoff is not None
+                    else F.lit(False)
+                ).select(F.col("id").alias("doc_id"))
 
-        n_after_learned_quality = None
+            stages.append(_Stage("fluency_cut", "n_after_fluency", _drop(fluency_drops)))
         if quality_model is not None:
             from eligibility_etl_airflow_spark.operators import quality_model as qm
 
-            # a TRAINED model (train_quality_classifier output — distilled
-            # from human tags, an LLM judge, or a cleaner corpus) gates the
-            # funnel; scoring is the UDF-free broadcast-join aggregate, so
-            # this stage adds one partial-agg pass over the cached relation
-            drop_ids = (
-                qm.score_quality(hygienic, "doc_id", "text", quality_model)
+            # a TRAINED model gates the funnel; scoring is the UDF-free
+            # broadcast-join aggregate — one partial-agg pass over the cache
+            stages.append(_Stage("learned_quality", "n_after_learned_quality", _drop(
+                lambda cur: qm.score_quality(cur, "doc_id", "text", quality_model)
                 .filter(F.col("score") < quality_model_min)
                 .select(F.col("id").alias("doc_id"))
-            )
-            hygienic = hygienic.join(drop_ids, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            hygiene_caches.append(hygienic)
-            n_after_learned_quality = hygienic.count()
-            snapshots.append(("learned_quality", hygienic))
+            )))
 
-        # exact dedup: keep min doc_id per content hash
-        keeper = (
-            hygienic.select(
-                "doc_id", text.fingerprint_md5(F.col("text")).alias("content_hash")
+        def neardup_losers(cur: DataFrame) -> DataFrame:
+            pairs = neardup.minhash_lsh_pairs(
+                cur, "doc_id", "text", jaccard_threshold=jaccard_threshold
             )
-            .groupBy("content_hash")
-            .agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id")
-        )
-        exact_kept = hygienic.join(keeper, "doc_id", "left_semi").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        n_exact = exact_kept.count()
-        snapshots.append(("exact_dedup", exact_kept))
-
-        pairs = neardup.minhash_lsh_pairs(
-            exact_kept, "doc_id", "text", jaccard_threshold=jaccard_threshold
-        )
-        if neardup_removal == "component":
+            if neardup_removal == "pair":
+                # drop the higher doc_id of each verified pair
+                return pairs.select(F.col("id_b").alias("doc_id")).distinct()
             # one keeper per transitive near-dup group (LSH pairs are
             # unblocked, so this takes the iterative components tier)
             from eligibility_etl_airflow_spark.operators import components
 
-            labeled = components.connected_components(
-                pairs, cluster_col="cluster_id"
-            )
-            if neardup_keeper == "quality":
-                # keep the BEST-quality member of each component (min
-                # doc_id tie-break) — the cluster_representatives policy.
-                # Only graph nodes reach the window; the corpus never
-                # shuffles on cluster_id.
-                from pyspark.sql.window import Window
-
-                scored = labeled.join(
-                    exact_kept.select(
-                        F.col("doc_id").alias("id"),
-                        text.quality_score(F.col("text")).alias("__q"),
-                    ),
-                    "id",
-                )
-                w = Window.partitionBy("cluster_id").orderBy(
-                    F.col("__q").desc(), F.col("id").asc()
-                )
-                losers = (
-                    scored.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") > 1)
-                    .select(F.col("id").alias("doc_id"))
-                )
-            else:
-                losers = labeled.filter(F.col("id") != F.col("cluster_id")).select(
+            labeled = components.connected_components(pairs, cluster_col="cluster_id")
+            if neardup_keeper == "min_id":
+                return labeled.filter(F.col("id") != F.col("cluster_id")).select(
                     F.col("id").alias("doc_id")
                 )
-        else:  # "pair" — validated at entry
-            # drop the higher doc_id of each verified pair
-            losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-        # persisted: the survivor set feeds the clustered write, the
-        # audit anti-join, and (when enabled) the semantic stage's
-        # embedding semi-join + k-means E/M rounds — without it the
-        # LSH/components loser lineage re-executes per consumer job
-        curated = exact_kept.join(losers, "doc_id", "left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        hygiene_caches.append(curated)
-        snapshots.append(("neardup_removal", curated))
+            # keep the BEST-quality member of each component (min doc_id
+            # tie-break) — the cluster_representatives policy. Only graph
+            # nodes reach the window; the corpus never shuffles on
+            # cluster_id.
+            from pyspark.sql.window import Window
 
-        n_after_semantic = None
+            scored = labeled.join(
+                cur.select(
+                    F.col("doc_id").alias("id"),
+                    text.quality_score(F.col("text")).alias("__q"),
+                ),
+                "id",
+            )
+            w = Window.partitionBy("cluster_id").orderBy(
+                F.col("__q").desc(), F.col("id").asc()
+            )
+            return (
+                scored.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") > 1)
+                .select(F.col("id").alias("doc_id"))
+            )
+
+        stages += [
+            # exact dedup: keep min doc_id per content hash
+            _Stage("exact_dedup", "n_after_exact_dedup", _keep(
+                lambda cur: cur.select(
+                    "doc_id", text.fingerprint_md5(F.col("text")).alias("content_hash")
+                )
+                .groupBy("content_hash")
+                .agg(F.min("doc_id").alias("doc_id"))
+                .select("doc_id")
+            )),
+            # persisted, not counted (n_curated comes from the sink
+            # footers): the survivors feed the clustered write, the audit
+            # anti-join and the semantic stage — without the cache the
+            # LSH/components loser lineage re-runs per consumer job
+            _Stage("neardup_removal", None, _drop(neardup_losers)),
+        ]
         if semantic_eps is not None:
             from eligibility_etl_airflow_spark.operators import semdedup
-            emb = (
-                embeddings
-                if embeddings is not None
-                else Catalog(spark, sf_dir).embeddings.select(
-                    F.col("vec_id").alias("doc_id"), "embedding"
-                )
-            )
-            surv_emb = emb.join(curated.select("doc_id"), "doc_id", "left_semi")
-            sem_drops = (
-                semdedup.semantic_dedup_drops(
-                    surv_emb, "doc_id", "embedding", k=semantic_k, eps=semantic_eps
+
+            stages.append(_Stage("semantic_dedup", "n_after_semantic", _drop(
+                lambda cur: semdedup.semantic_dedup_drops(
+                    doc_embeddings().join(cur.select("doc_id"), "doc_id", "left_semi"),
+                    "doc_id", "embedding", k=semantic_k, eps=semantic_eps,
                 )
                 .filter(~F.col("capped_cluster"))
                 .select(F.col("id").alias("doc_id"))
-            )
-            curated = curated.join(sem_drops, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            hygiene_caches.append(curated)
-            n_after_semantic = curated.count()
-            snapshots.append(("semantic_dedup", curated))
+            )))
 
+        curated = f.run(stages)
         out_path = os.path.join(out_dir, "curated_docs")
         sinks.write_clustered(curated, out_path, ["doc_id"])
-        n_curated = spark.read.parquet(out_path).count()
+        f.stats["n_curated"] = spark.read.parquet(out_path).count()
         if audit_path is not None:
-            # which stage dropped each doc: anti-join consecutive stage
-            # snapshots and union the labeled drops — the curation
-            # funnel's audit trail, (doc_id, dropped_at), one row per
-            # dropped doc. Every intermediate snapshot is persisted, so
-            # each anti-join is a cached-probe join; the "source" end
-            # re-reads the documents parquet once, column-pruned to
-            # doc_id (the one honest extra scan the audit costs)
-            dropped = None
-            for (_, prev_df), (name, cur_df) in zip(snapshots, snapshots[1:]):
-                d_ids = (
-                    prev_df.select("doc_id")
-                    .join(cur_df.select("doc_id"), "doc_id", "left_anti")
-                    .withColumn("dropped_at", F.lit(name))
-                )
-                dropped = d_ids if dropped is None else dropped.unionByName(d_ids)
-            sinks.write_parquet(dropped, audit_path)
-    finally:
-        filtered.unpersist()
-        for cached in hygiene_caches:
-            cached.unpersist()
-        if exact_kept is not None:
-            exact_kept.unpersist()
-        if lang_scored is not None:
-            lang_scored.unpersist()
-    stats = {
-        "n_total": n_total,
-        "n_after_quality_lang": n_filtered,
-        "n_after_exact_dedup": n_exact,
-        "n_curated": n_curated,
-    }
-    if n_after_blocklist is not None:
-        stats["n_after_blocklist"] = n_after_blocklist
-    if n_after_repetition is not None:
-        stats["n_after_repetition"] = n_after_repetition
-    if n_after_decontam is not None:
-        stats["n_after_decontam"] = n_after_decontam
-    if n_after_semantic_decontam is not None:
-        stats["n_after_semantic_decontam"] = n_after_semantic_decontam
-    if n_after_fluency is not None:
-        stats["n_after_fluency"] = n_after_fluency
-    if n_after_learned_quality is not None:
-        stats["n_after_learned_quality"] = n_after_learned_quality
-    if n_after_semantic is not None:
-        stats["n_after_semantic"] = n_after_semantic
-    return stats
+            sinks.write_parquet(f.drops("doc_id", "dropped_at"), audit_path)
+    return f.stats
 
 
 def run_multi_business_unit(
@@ -672,7 +792,6 @@ def run_training_prep_pipeline(
     n_span_tokens_removed = None
     if span_dedup:
         from eligibility_etl_airflow_spark.operators import dedup as dedup_ops
-        from eligibility_etl_airflow_spark.operators.components import _stable
 
         # eager checkpoint: the stats aggregate below AND the chunking
         # join both consume this relation — without truncation the whole
@@ -774,6 +893,7 @@ def _maybe_compact_state_indexes(
     spark: SparkSession,
     paths: list[str],
     threshold: int | None,
+    token_path: str | None = None,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict[str, dict]:
     """Between-batches housekeeping for the incremental loops' state
@@ -798,9 +918,17 @@ def _maybe_compact_state_indexes(
     it (the repo's documented trap), so it must land between batches,
     never mid-fold. The token index is deliberately NOT in any call
     site's list: each fold already rewrites it whole (staged rename),
-    so it self-compacts."""
+    so it self-compacts.
+
+    Defensive WAL guard: a pending token-index intent at ``token_path``
+    means a fold failed mid-protocol — structurally unreachable (the
+    exception would have propagated), but compacting then would
+    interleave a rewrite with an open recovery window, so nothing is
+    compacted and the next ingest heals first."""
     report: dict[str, dict] = {}
-    if threshold is None:
+    if threshold is None or (
+        token_path is not None and drift_ops.token_index_has_pending(token_path)
+    ):
         return report
     for path in paths:
         # heal a previous cycle's mid-swap crash before (re-)compacting
@@ -824,6 +952,117 @@ def _maybe_compact_state_indexes(
                 cluster_by=STATE_INDEX_CLUSTER_KEYS.get(base),
             )
     return report
+
+
+def _heal_state(paths: list[str], probe: str) -> bool:
+    """Heal a compaction that crashed mid-swap last cycle, then report
+    whether state exists. The heal must precede the probe: a mid-swap
+    crash leaves an index MISSING (its data intact in ``__old_*``), and a
+    replayed batch that reads "no state" re-accepts duplicates. The
+    token index rides along: its fold swaps via ``__old_``/``__merge_``
+    and its first build stages a ``__backfill_`` tmp, so a crash between
+    write and rename would otherwise leak a full-index-sized dir."""
+    for path in paths:
+        sinks.recover_interrupted_compaction(path)
+    return os.path.exists(probe)
+
+
+class _TokenIndex:
+    """The incremental loops' persisted (token, count) unigram index —
+    the corpus side of the per-batch drift monitor, maintained from each
+    accepted batch so drift costs O(batch + vocab) and accepted text is
+    never re-read. Maintained whenever it exists or ``drift_report`` is
+    on, so a later flag-off call cannot let it go stale.
+
+    The protocol, in call order: recovery fold (a prior run that crashed
+    between a state write and its fold left a ``__pending`` intent; fold
+    each kind now, exactly once via the per-kind ``_folded`` markers and
+    only if that mutation reached the docs state; a mid-swap crash
+    discards the intent and the backfill recounts) → one-time backfill
+    of a pre-index state from the accepted docs (staged write + rename)
+    → batch counts → JSD against the PRE-append index → write-ahead
+    intents (``stage``, BEFORE any state write, one per kind because the
+    writes land at different times) → the caller's state writes → the
+    final ``fold``, LAST, mirroring what the writes did."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        docs_path: str,
+        kinds: tuple[str, ...],
+        drift_report: bool,
+        has_corpus: bool,
+    ) -> None:
+        self.spark, self.path, self.kinds = spark, path, kinds
+        self.drift_report = drift_report
+        self.maintain = (
+            drift_report
+            or os.path.exists(path)
+            or drift_ops.token_index_has_pending(path)
+        )
+        if not self.maintain:
+            return
+        for kind in kinds:
+            drift_ops.token_index_fold(
+                spark, path, docs_path=docs_path, verify_landed=True, kind=kind
+            )
+        if has_corpus and not os.path.exists(path):
+            import uuid
+
+            backfill = drift_ops.unigram_counts(
+                spark.read.parquet(docs_path).select("text")
+            )
+            tmp = f"{path}__backfill_{uuid.uuid4().hex[:8]}"
+            backfill.write.mode("overwrite").parquet(tmp)
+            os.rename(tmp, path)
+
+    def counts(self, df: DataFrame) -> DataFrame:
+        return _stable(drift_ops.unigram_counts(df.select("text")))
+
+    def batch_drift(
+        self, accepted: DataFrame, n_accepted: int
+    ) -> tuple[DataFrame | None, dict]:
+        """The accepted batch's token counts (None when not maintained or
+        empty) and, under ``drift_report``, its JSD stats against the
+        pre-append corpus."""
+        if not (self.maintain and n_accepted):
+            return None, {}
+        batch_counts = self.counts(accepted)
+        if not (self.drift_report and os.path.exists(self.path)):
+            return batch_counts, {}
+        row = drift_ops.js_divergence_counts(
+            batch_counts, self.spark.read.parquet(self.path)
+        ).collect()[0]
+        return batch_counts, {
+            "batch_js_divergence": row["js_divergence"],
+            "batch_vocab_shared": row["vocab_shared"],
+        }
+
+    def stage(
+        self,
+        kind: str,
+        rel: DataFrame,
+        add: DataFrame,
+        subtract: DataFrame | None = None,
+    ) -> None:
+        """Write-ahead intent for ``rel``'s deltas, keyed by its content."""
+        drift_ops.token_index_pending_write(
+            self.path,
+            drift_ops.batch_content_key((kind, rel)),
+            add=add,
+            subtract=subtract,
+            ids=rel.select("doc_id"),
+            kind=kind,
+        )
+
+    def fold(self) -> None:
+        """Fold the staged intents in, exactly once per kind: the batch
+        key recorded inside the index directory makes a replay a no-op
+        (the landed check is skipped in-process — the writes just ran)."""
+        if self.maintain:
+            for kind in self.kinds:
+                drift_ops.token_index_fold(self.spark, self.path, kind=kind)
 
 
 def run_incremental_curation(
@@ -899,44 +1138,24 @@ def run_incremental_curation(
     operation appends one delta file per batch forever and every
     vs-state join pays the listing. ``None`` disables.
     """
-    from pyspark import StorageLevel
-
     from eligibility_etl_airflow_spark.operators import neardup, text
-    from eligibility_etl_airflow_spark.operators.components import _stable
 
     docs_path = os.path.join(state_dir, "accepted_docs")
     hash_path = os.path.join(state_dir, "index_hashes")
     band_path = os.path.join(state_dir, "index_bands")
     shingle_path = os.path.join(state_dir, "index_shingles")
     token_path = os.path.join(state_dir, "index_tokens")
-    # a compaction that crashed mid-swap last cycle leaves an index
-    # MISSING (its data intact in __old_*) — healing must precede the
-    # has_state probe or a replayed batch reads "no state" and
-    # re-accepts duplicates
-    # token_path rides along: its fold swaps via __old_/__merge_ and its
-    # first build stages a __backfill_ tmp — a crash between write and
-    # rename would otherwise leak a full-index-sized dir forever, and a
-    # mid-swap crash heals here (restore newest __old_; the surviving
-    # __pending_ intent then re-folds via the recovery path below)
-    for _p in (
-        docs_path,
-        hash_path,
-        band_path,
-        shingle_path,
-        token_path,
-        os.path.join(state_dir, "index_vectors"),
-    ):
-        sinks.recover_interrupted_compaction(_p)
-    has_state = os.path.exists(hash_path)
+    vec_path = os.path.join(state_dir, "index_vectors")
+    state_paths = [docs_path, hash_path, band_path, shingle_path, vec_path]
+    has_state = _heal_state(state_paths + [token_path], probe=hash_path)
 
     n_batch = batch.count()
     hashed = batch.withColumn("content_hash", text.fingerprint_md5(F.col("text")))
     keeper = hashed.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
-    internal = hashed.join(keeper.select("doc_id"), "doc_id", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    caches = [internal]
-    try:
+    with _Funnel() as f:
+        internal = f.cache(
+            hashed.join(keeper.select("doc_id"), "doc_id", "left_semi")
+        )
         n_internal = internal.count()
 
         if has_state:
@@ -953,18 +1172,14 @@ def run_incremental_curation(
                 "content_hash",
                 "left_semi",
             )
-            fresh = internal.join(
-                F.broadcast(present), "content_hash", "left_anti"
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(fresh)
+            fresh = f.cache(
+                internal.join(F.broadcast(present), "content_hash", "left_anti")
+            )
         else:
             fresh = internal
         n_fresh = fresh.count()
 
-        sh = neardup.shingle_table(fresh, "doc_id", "text", shingle_k).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        caches.append(sh)
+        sh = f.cache(neardup.shingle_table(fresh, "doc_id", "text", shingle_k))
         band_tab = neardup.signature_band_table(sh, num_perm, bands).select(
             "id", F.posexplode_outer("bands").alias("band_idx", "band_sig")
         )
@@ -985,10 +1200,11 @@ def run_incremental_curation(
             # probed subset is equivalent to the global count for every
             # band that can produce a candidate.
             probe = band_tab.select("band_idx", "band_sig").distinct()
-            state_hits = state_bands.join(
-                F.broadcast(probe), ["band_idx", "band_sig"], "left_semi"
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(state_hits)
+            state_hits = f.cache(
+                state_bands.join(
+                    F.broadcast(probe), ["band_idx", "band_sig"], "left_semi"
+                )
+            )
             # boilerplate cap on the STATE side: a band shared by
             # everyone has no discriminative signal but linear fan-out
             hot = (
@@ -1052,10 +1268,7 @@ def run_incremental_curation(
                 .select(F.col("new_id").alias("doc_id"))
                 .distinct()
             )
-            survivors = fresh.join(dup_new, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            caches.append(survivors)
+            survivors = f.cache(fresh.join(dup_new, "doc_id", "left_anti"))
         else:
             survivors = fresh
         n_vs_state = survivors.count()
@@ -1073,10 +1286,7 @@ def run_incremental_curation(
             jaccard_threshold=jaccard_threshold,
         )
         losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-        accepted = survivors.join(losers, "doc_id", "left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        caches.append(accepted)
+        accepted = f.cache(survivors.join(losers, "doc_id", "left_anti"))
         n_after_byte = accepted.count()
 
         n_after_semantic = None
@@ -1095,15 +1305,11 @@ def run_incremental_curation(
             )
 
             cent_path = os.path.join(state_dir, "index_centroids")
-            vec_path = os.path.join(state_dir, "index_vectors")
-            bvec = (
-                accepted.where(F.col(embedding_col).isNotNull())
-                .select(
+            bvec = f.cache(
+                accepted.where(F.col(embedding_col).isNotNull()).select(
                     "doc_id", as_double_array(F.col(embedding_col)).alias("v")
                 )
-                .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            caches.append(bvec)
             if os.path.exists(cent_path):
                 cents = spark.read.parquet(cent_path)
             else:
@@ -1196,10 +1402,7 @@ def run_incremental_curation(
                     if sem_drop_ids is None
                     else sem_drop_ids.unionByName(within_ids).distinct()
                 )
-                accepted = accepted.join(all_sem, "doc_id", "left_anti").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                caches.append(accepted)
+                accepted = f.cache(accepted.join(all_sem, "doc_id", "left_anti"))
                 n_after_semantic = accepted.count()
                 # the accepted vectors enter the index WITH their
                 # assignment, so future batches compare without
@@ -1234,62 +1437,16 @@ def run_incremental_curation(
 
         # drift vs the PRE-append corpus via the persisted token index
         # (backfilled once for a pre-index state) — O(batch + vocab),
-        # accepted text never re-read; same design as the crawl
-        # ingest's monitor (see run_incremental_crawl_ingest)
-        drift_row = None
-        batch_counts = None
-        from eligibility_etl_airflow_spark.operators import drift as drift_ops
-
-        maintain_tokens = (
-            drift_report
-            or os.path.exists(token_path)
-            or drift_ops.token_index_has_pending(token_path)
+        # accepted text never re-read; the write-ahead intent is staged
+        # BEFORE any state write so a crash between the appends and the
+        # fold stays recoverable
+        tokens = _TokenIndex(
+            spark, token_path, docs_path, ("acc",), drift_report,
+            has_corpus=os.path.exists(docs_path),
         )
-        if maintain_tokens:
-            import uuid as _uuid
-
-            # recovery: complete a crashed prior run's staged fold before
-            # this batch's JSD reads the index (see the crawl twin; a
-            # mid-swap crash discards the intent and the backfill below
-            # recounts)
-            drift_ops.token_index_fold(
-                spark, token_path, docs_path=docs_path,
-                verify_landed=True, kind="acc",
-            )
-
-            if os.path.exists(docs_path) and not os.path.exists(token_path):
-                backfill = drift_ops.unigram_counts(
-                    spark.read.parquet(docs_path).select("text")
-                )
-                tmp = f"{token_path}__backfill_{_uuid.uuid4().hex[:8]}"
-                backfill.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, token_path)
-            if n_accepted:
-                batch_counts = _stable(
-                    drift_ops.unigram_counts(accepted.select("text"))
-                )
-            if drift_report and batch_counts is not None and os.path.exists(
-                token_path
-            ):
-                drift_row = (
-                    drift_ops.js_divergence_counts(
-                        batch_counts, spark.read.parquet(token_path)
-                    )
-                    .collect()[0]
-                    .asDict()
-                )
-
-        # write-ahead token-delta intent BEFORE any state write (crash
-        # between the appends and the fold stays recoverable — see the
-        # crawl twin's rationale)
-        if maintain_tokens and batch_counts is not None:
-            drift_ops.token_index_pending_write(
-                token_path,
-                drift_ops.batch_content_key(("acc", accepted)),
-                add=batch_counts,
-                ids=accepted.select("doc_id"),
-                kind="acc",
-            )
+        batch_counts, drift_stats = tokens.batch_drift(accepted, n_accepted)
+        if batch_counts is not None:
+            tokens.stage("acc", accepted, batch_counts)
 
         # idempotent index + corpus maintenance (doc_id-keyed appends).
         # The corpus append's return value is the id-reuse detector: a
@@ -1313,44 +1470,14 @@ def run_incremental_curation(
             # exclusion above, a crash anywhere between these appends
             # leaves a state a replayed batch handles as a no-op (the
             # byte-level indexes are complete before any vector lands)
-            sinks.append_dedup(
-                spark,
-                os.path.join(state_dir, "index_vectors"),
-                acc_vecs,
-                ["id"],
-            )
-
-        # fold the staged intent into the token index LAST; the batch
-        # key inside the index directory makes the fold exactly-once
-        # across crash/replay (see the crawl twin); landed check skipped
-        # in-process
-        if maintain_tokens:
-            drift_ops.token_index_fold(spark, token_path, kind="acc")
-    finally:
-        for c in caches:
-            c.unpersist()
+            sinks.append_dedup(spark, vec_path, acc_vecs, ["id"])
+        tokens.fold()
     # between-batches index compaction: all appends and folds above have
     # landed and every batch cache is unpersisted, so the rewrite's
     # refresh-by-path cannot invalidate a live plan; the token index
-    # self-compacts per fold and is excluded. Defensive WAL guard: a
-    # pending intent here means a fold above failed mid-protocol —
-    # structurally unreachable (the exception would have propagated),
-    # but compacting in that state would interleave a rewrite with an
-    # open recovery window, so skip and let the next ingest heal first.
-    compacted = (
-        {}
-        if drift_ops.token_index_has_pending(token_path)
-        else _maybe_compact_state_indexes(
-            spark,
-            [
-                docs_path,
-                hash_path,
-                band_path,
-                shingle_path,
-                os.path.join(state_dir, "index_vectors"),
-            ],
-            compact_threshold,
-        )
+    # self-compacts per fold and is excluded
+    compacted = _maybe_compact_state_indexes(
+        spark, state_paths, compact_threshold, token_path
     )
     stats = {
         "n_batch": n_batch,
@@ -1376,9 +1503,7 @@ def run_incremental_curation(
         # frozen per corpus lifetime by design, so a hot cluster cannot
         # be split without retraining)
         stats["n_semantic_capped"] = n_semantic_capped
-    if drift_row is not None:
-        stats["batch_js_divergence"] = drift_row["js_divergence"]
-        stats["batch_vocab_shared"] = drift_row["vocab_shared"]
+    stats.update(drift_stats)
     if compacted:
         stats["compacted_indexes"] = compacted
     return stats
@@ -1426,9 +1551,8 @@ def run_media_curation_pipeline(
 
     if kind not in ("image", "audio"):
         raise ValueError(f"kind must be 'image' or 'audio', got {kind!r}")
-    from pyspark import StorageLevel
-
     decodable = {"image": ("bmp",), "audio": ("riff",)}[kind]
+    readable = F.col(binary_col).isNotNull() & F.col("format").isin(*decodable)
 
     with_meta = media.withColumn(
         "meta", multimodal.binary_metadata(F.col(binary_col))
@@ -1439,53 +1563,38 @@ def run_media_curation_pipeline(
         F.col("meta.format").alias("format"),
         F.col("meta.content_md5").alias("content_md5"),
     )
-    n_total = media.count()
-    readable = with_meta.filter(
-        F.col(binary_col).isNotNull() & F.col("format").isin(*decodable)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    caches = [readable]
-    try:
-        n_readable = readable.count()
-        quarantine = with_meta.filter(
-            F.col(binary_col).isNull() | ~F.col("format").isin(*decodable)
-        ).select(id_col, "format")
-        sinks.write_parquet(quarantine, os.path.join(out_dir, "quarantine"))
+    neardup_pairs = (
+        multimodal.image_neardup_pairs
+        if kind == "image"
+        else multimodal.audio_neardup_pairs
+    )
 
-        keeper = readable.groupBy("content_md5").agg(
-            F.min(id_col).alias(id_col)
-        )
-        exact_kept = readable.join(
-            keeper.select(id_col), id_col, "left_semi"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(exact_kept)
-        n_exact = exact_kept.count()
+    def neardup_losers(cur: DataFrame) -> DataFrame:
+        pairs = neardup_pairs(cur, id_col, binary_col, max_hamming=max_hamming)
+        labeled = components.attach_components(cur.select(id_col), id_col, pairs)
+        return labeled.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
 
-        neardup_pairs = (
-            multimodal.image_neardup_pairs
-            if kind == "image"
-            else multimodal.audio_neardup_pairs
+    with _Funnel() as f:
+        f.start(media)
+        f.run([_Stage("unreadable", "n_readable", lambda _: with_meta.filter(readable))])
+        sinks.write_parquet(
+            with_meta.filter(~readable).select(id_col, "format"),
+            os.path.join(out_dir, "quarantine"),
         )
-        pairs = neardup_pairs(
-            exact_kept, id_col, binary_col, max_hamming=max_hamming
-        )
-        labeled = components.attach_components(
-            exact_kept.select(id_col), id_col, pairs
-        )
-        losers = labeled.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
-        curated = exact_kept.join(losers, id_col, "left_anti").drop(binary_col)
+        exact_kept = f.run([_Stage("exact_dedup", "n_after_exact", _keep(
+            lambda cur: cur.groupBy("content_md5")
+            .agg(F.min(id_col).alias(id_col))
+            .select(id_col),
+            id_col,
+        ))])
+        curated = exact_kept.join(
+            neardup_losers(exact_kept), id_col, "left_anti"
+        ).drop(binary_col)
         out_path = os.path.join(out_dir, "curated_media")
         sinks.write_clustered(curated, out_path, [id_col])
-        n_curated = spark.read.parquet(out_path).count()
-    finally:
-        for c in caches:
-            c.unpersist()
-    return {
-        "n_total": n_total,
-        "n_readable": n_readable,
-        "n_quarantined": n_total - n_readable,
-        "n_after_exact": n_exact,
-        "n_curated": n_curated,
-    }
+        f.stats["n_curated"] = spark.read.parquet(out_path).count()
+    f.stats["n_quarantined"] = f.stats["n_total"] - f.stats["n_readable"]
+    return f.stats
 
 
 def run_crawl_preprocess_pipeline(
@@ -1566,206 +1675,40 @@ def run_crawl_preprocess_pipeline(
     as the ``sf_dir`` of run_corpus_curation_pipeline /
     run_training_prep_pipeline: the crawl → curate → prep funnel chains
     end to end with no glue."""
-    from pyspark import StorageLevel
-
-    from eligibility_etl_airflow_spark.operators import dedup, text, urls
-
     if line_max_df < 2:
         raise ValueError(f"line_max_df must be >= 2, got {line_max_df}")
 
-    n_total = raw.count()
-    caches: list[DataFrame] = []
-    try:
-        # 0. robots admission (optional)
-        n_after_robots = None
-        admitted = raw
-        if robots_df is not None:
-            from eligibility_etl_airflow_spark.operators import robots as robots_ops
-
-            rules = robots_ops.robots_rules(
-                robots_df, robots_domain_col, robots_text_col, agent=robots_agent
+    with _Funnel() as f:
+        f.start(raw)
+        current = f.run(
+            _robots_stages(
+                url_col, robots_df, robots_domain_col, robots_text_col,
+                robots_agent, robots_key,
             )
-            admitted = (
-                robots_ops.robots_allowed(raw, url_col, rules, key=robots_key)
-                .filter(F.col("crawl_allowed"))
-                .drop("crawl_allowed", "matched_pattern")
-                .persist(StorageLevel.MEMORY_AND_DISK)
+            + _url_stages(id_col, url_col)
+            + _crawl_clean_stages(
+                f.cache, id_col, html_col, line_max_df, nfc,
+                blocklist_terms, blocklist_max_fraction,
+                min_latin_fraction, max_mojibake_per_kchar,
             )
-            caches.append(admitted)
-            n_after_robots = admitted.count()
-
-        def drops(survivors: DataFrame, source: DataFrame, reason: str) -> DataFrame:
-            # post-strip relations carry only the canonical form
-            u = url_col if url_col in source.columns else "url_canonical"
-            return (
-                source.select(id_col, u)
-                .join(survivors.select(id_col), id_col, "left_anti")
-                .select(
-                    F.col(id_col).alias("doc_id"),
-                    F.col(u).alias("url"),
-                    F.lit(reason).alias("reason"),
-                )
-            )
-
-        quarantine_parts: list[DataFrame] = []
-        if quarantine_path is not None and robots_df is not None:
-            quarantine_parts.append(drops(admitted, raw, "robots_disallowed"))
-
-        # 1. canonicalize + URL dedup
-        with_url = urls.url_components(admitted, url_col).filter(
-            F.col("url_canonical").isNotNull()
         )
-        keeper = (
-            with_url.groupBy("url_canonical")
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
-        )
-        url_deduped = with_url.join(keeper, id_col, "left_semi").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        caches.append(url_deduped)
-        n_url_deduped = url_deduped.count()
-        if quarantine_path is not None:
-            quarantine_parts.append(drops(with_url, admitted, "malformed_url"))
-            quarantine_parts.append(drops(url_deduped, with_url, "url_duplicate"))
-
-        # 2+3. HTML → text (newline-preserving), then line-level dedup
-        # persisted: line_dedup consumes its input through TWO physical
-        # subtrees (the line-frequency aggregate and the join probe), so
-        # without the cache the strip_html regexp chain — the dominant
-        # map cost at crawl scale — would execute twice
-        texted = url_deduped.select(
-            id_col,
-            "url_canonical",
-            F.col("url_domain").alias("domain"),
-            text.strip_html(F.col(html_col), collapse_ws=False).alias("text"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(texted)
-        lined = dedup.line_dedup(texted, id_col, "text", max_line_df=line_max_df)
-        rebuilt = (
-            texted.drop("text")
-            .join(lined.select(id_col, "text_clean"), id_col)
-            .filter(F.trim(F.col("text_clean")) != "")
-            .withColumnRenamed("text_clean", "text")
-        )
-        # 4. NFC — map-only, composes into the same pass
-        if nfc:
-            rebuilt = rebuilt.withColumn("text", text.unicode_nfc(F.col("text")))
-        cleaned = rebuilt.persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(cleaned)
-        n_after_lines = cleaned.count()
-        if quarantine_path is not None:
-            quarantine_parts.append(
-                drops(cleaned, url_deduped, "boilerplate_empty")
-            )
-
-        # 5. blocklist gate (optional)
-        n_after_blocklist = None
-        current = cleaned
-        if blocklist_terms is not None:
-            drop_ids = (
-                text.blocklist_metrics(
-                    current,
-                    id_col,
-                    "text",
-                    terms=blocklist_terms,
-                    max_fraction=blocklist_max_fraction,
-                )
-                .filter(~F.col("keep"))
-                .select(id_col)
-            )
-            before_blocklist = current
-            current = current.join(drop_ids, id_col, "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            caches.append(current)
-            n_after_blocklist = current.count()
-            if quarantine_path is not None:
-                quarantine_parts.append(
-                    drops(current, before_blocklist, "blocklist")
-                )
-
-        # 6. script gate (optional)
-        n_after_script = None
-        if min_latin_fraction is not None:
-            profiled = current.select(
-                id_col, *text.script_profile(F.col("text"))
-            ).filter(F.col("frac_latin") >= min_latin_fraction)
-            before_script = current
-            current = current.join(
-                profiled.select(id_col), id_col, "left_semi"
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(current)
-            n_after_script = current.count()
-            if quarantine_path is not None:
-                quarantine_parts.append(
-                    drops(current, before_script, "script_gate")
-                )
-
-        # 7. mojibake gate (optional): double-encoded text is valid
-        # UTF-8, so the byte-level triage upstream cannot catch it —
-        # the derived cp1252-signature density does (operators/text.py)
-        n_after_mojibake = None
-        if max_mojibake_per_kchar is not None:
-            ok = text.mojibake_metrics(
-                current, id_col, "text",
-                max_per_kchar=max_mojibake_per_kchar,
-            ).filter(F.col("keep")).select(F.col("id").alias(id_col))
-            before_moji = current
-            current = current.join(ok, id_col, "left_semi").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            caches.append(current)
-            n_after_mojibake = current.count()
-            if quarantine_path is not None:
-                quarantine_parts.append(
-                    drops(current, before_moji, "mojibake_gate")
-                )
-
-        # the output IS a documents table: curation-compatible columns
-        # (lang via the marker heuristic, source = registered domain,
-        # n_chars) written under documents.parquet so this stage's
-        # out_dir is a valid sf_dir for run_corpus_curation_pipeline /
-        # run_training_prep_pipeline — the funnel chains end to end
-        final = current.select(
-            F.col(id_col).alias("doc_id"),
-            "text",
-            text.lang_id(F.col("text")).alias("lang"),
-            F.col("domain").alias("source"),
-            F.length("text").cast("long").alias("n_chars"),
-            "url_canonical",
-            "domain",
-        )
+        # the output IS a documents table written under documents.parquet,
+        # so this stage's out_dir is a valid sf_dir for
+        # run_corpus_curation_pipeline / run_training_prep_pipeline
         out_path = os.path.join(out_dir, "documents.parquet")
-        sinks.write_clustered(final, out_path, ["doc_id"])
-        n_out = spark.read.parquet(out_path).count()
-        n_quarantined = None
+        sinks.write_clustered(_documents_table(current, id_col), out_path, ["doc_id"])
+        f.stats["n_preprocessed"] = spark.read.parquet(out_path).count()
         if quarantine_path is not None:
-            from functools import reduce
+            # post-strip stages carry only the canonical URL form
+            def url(prev: DataFrame) -> list:
+                u = url_col if url_col in prev.columns else "url_canonical"
+                return [F.col(u).alias("url")]
 
-            q = reduce(lambda a, b: a.unionByName(b), quarantine_parts)
-            q.write.mode("overwrite").parquet(quarantine_path)
-            n_quarantined = spark.read.parquet(quarantine_path).count()
-    finally:
-        for c in caches:
-            c.unpersist()
-    stats = {
-        "n_total": n_total,
-        "n_after_url_dedup": n_url_deduped,
-        "n_after_line_dedup": n_after_lines,
-        "n_preprocessed": n_out,
-    }
-    if n_after_robots is not None:
-        stats["n_after_robots"] = n_after_robots
-    if n_quarantined is not None:
-        stats["n_quarantined"] = n_quarantined
-    if n_after_blocklist is not None:
-        stats["n_after_blocklist"] = n_after_blocklist
-    if n_after_script is not None:
-        stats["n_after_script"] = n_after_script
-    if n_after_mojibake is not None:
-        stats["n_after_mojibake"] = n_after_mojibake
-    return stats
+            f.drops(id_col, "reason", url).withColumnRenamed(
+                id_col, "doc_id"
+            ).write.mode("overwrite").parquet(quarantine_path)
+            f.stats["n_quarantined"] = spark.read.parquet(quarantine_path).count()
+    return f.stats
 
 
 def run_incremental_crawl_ingest(
@@ -1852,10 +1795,7 @@ def run_incremental_crawl_ingest(
     mid-fold), any of accepted_docs / index_urls / index_hashes whose
     parquet file count crossed the threshold is rewritten in place.
     ``None`` disables."""
-    from pyspark import StorageLevel
-
-    from eligibility_etl_airflow_spark.operators import dedup, text, urls
-    from eligibility_etl_airflow_spark.operators.components import _stable
+    from eligibility_etl_airflow_spark.operators import text
 
     if recrawl_policy not in ("skip", "update"):
         raise ValueError(
@@ -1865,18 +1805,11 @@ def run_incremental_crawl_ingest(
     url_index = os.path.join(state_dir, "index_urls")
     hash_index = os.path.join(state_dir, "index_hashes")
     token_index = os.path.join(state_dir, "index_tokens")
-    # heal a mid-swap compaction crash BEFORE the has_state probe (see
-    # run_incremental_curation — a missing url/hash index reads as "no
-    # state" and a replay re-accepts duplicates)
-    # token_index rides along for the same __backfill_/__merge_ stray-tmp
-    # and mid-fold-swap healing as the curation loop's heal list
-    for _p in (docs_path, url_index, hash_index, token_index):
-        sinks.recover_interrupted_compaction(_p)
-    has_state = os.path.exists(url_index)
+    state_paths = [docs_path, url_index, hash_index]
+    has_state = _heal_state(state_paths + [token_index], probe=url_index)
 
-    n_batch = batch.count()
-    caches: list[DataFrame] = []
-    try:
+    with _Funnel() as f:
+        f.start(batch, "n_batch")
         # one-time state migration: a url index written before the
         # update-policy era lacks content_hash; appending 3-column rows
         # into a 2-column directory would mix parquet schemas (reads
@@ -1887,17 +1820,12 @@ def run_incremental_crawl_ingest(
             import shutil
             import uuid
 
-            from eligibility_etl_airflow_spark.operators import text as _text
-            from eligibility_etl_airflow_spark.operators.components import (
-                _stable as _stable_mig,
-            )
-
-            migrated = _stable_mig(
+            migrated = _stable(
                 spark.read.parquet(url_index)
                 .select("url_canonical", "doc_id")
                 .join(
                     spark.read.parquet(docs_path).select(
-                        "doc_id", _text.fingerprint_md5(F.col("text")).alias(
+                        "doc_id", text.fingerprint_md5(F.col("text")).alias(
                             "content_hash"
                         )
                     ),
@@ -1912,35 +1840,16 @@ def run_incremental_crawl_ingest(
             os.rename(tmp, url_index)
             shutil.rmtree(old_dir)
 
-        # robots admission first — a compliant crawler never fetched a
-        # disallowed URL, so nothing downstream should see it (same
-        # stage-0 contract as run_crawl_preprocess_pipeline)
-        admitted = batch
-        n_after_robots = None
-        if robots_df is not None:
-            from eligibility_etl_airflow_spark.operators import robots as robots_ops
-
-            rules = robots_ops.robots_rules(
-                robots_df, robots_domain_col, robots_text_col, agent=robots_agent
+        # robots admission first (same stage as
+        # run_crawl_preprocess_pipeline), then canonicalize + within-batch
+        # URL dedup
+        admitted = f.run(
+            _robots_stages(
+                url_col, robots_df, robots_domain_col, robots_text_col,
+                robots_agent, robots_key,
             )
-            admitted = (
-                robots_ops.robots_allowed(batch, url_col, rules, key=robots_key)
-                .filter(F.col("crawl_allowed"))
-                .drop("crawl_allowed", "matched_pattern")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            caches.append(admitted)
-            n_after_robots = admitted.count()
-
-        with_url = urls.url_components(admitted, url_col).filter(
-            F.col("url_canonical").isNotNull()
         )
-        keeper = (
-            with_url.groupBy("url_canonical")
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
-        )
-        batch_urls = with_url.join(keeper, id_col, "left_semi")
+        batch_urls = _fold(_url_stages(id_col, url_col), admitted)
         recrawls_src = None
         if has_state:
             # state-shuffle-free URL dedup (r9, same shape as the hash
@@ -1956,10 +1865,8 @@ def run_incremental_crawl_ingest(
                 "left_semi",
             )
             if recrawl_policy == "update":
-                batch_urls = batch_urls.persist(StorageLevel.MEMORY_AND_DISK)
-                caches.append(batch_urls)
-                url_present = url_present.persist(StorageLevel.MEMORY_AND_DISK)
-                caches.append(url_present)
+                batch_urls = f.cache(batch_urls)
+                url_present = f.cache(url_present)
                 recrawls_src = batch_urls.join(
                     F.broadcast(url_present), "url_canonical", "left_semi"
                 )
@@ -1968,47 +1875,20 @@ def run_incremental_crawl_ingest(
             )
         else:
             url_deduped = batch_urls
-        url_deduped = url_deduped.persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(url_deduped)
-        n_new_urls = url_deduped.count()
+        url_deduped = f.cache(url_deduped)
+        f.stats["n_new_urls"] = url_deduped.count()
+
+        # the preprocess funnel's clean stages folded lazily (no
+        # per-stage persist or count), then the content hash; the
+        # line-frequency window is the relation it is given (per split
+        # in update mode — documented trade)
+        clean_stages = _crawl_clean_stages(
+            f.cache, id_col, html_col, line_max_df, nfc,
+            blocklist_terms, blocklist_max_fraction, min_latin_fraction,
+        )
 
         def clean(rel: DataFrame) -> DataFrame:
-            # strip -> line dedup -> NFC -> gates -> content hash; the
-            # line-frequency window is the relation it is given (per
-            # split in update mode — documented trade)
-            texted = rel.select(
-                id_col,
-                "url_canonical",
-                F.col("url_domain").alias("domain"),
-                text.strip_html(F.col(html_col), collapse_ws=False).alias("text"),
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(texted)
-            lined = dedup.line_dedup(texted, id_col, "text", max_line_df=line_max_df)
-            rebuilt = (
-                texted.drop("text")
-                .join(lined.select(id_col, "text_clean"), id_col)
-                .filter(F.trim(F.col("text_clean")) != "")
-                .withColumnRenamed("text_clean", "text")
-            )
-            if nfc:
-                rebuilt = rebuilt.withColumn("text", text.unicode_nfc(F.col("text")))
-            current = rebuilt
-            if blocklist_terms is not None:
-                drop_ids = (
-                    text.blocklist_metrics(
-                        current, id_col, "text",
-                        terms=blocklist_terms, max_fraction=blocklist_max_fraction,
-                    )
-                    .filter(~F.col("keep"))
-                    .select(id_col)
-                )
-                current = current.join(drop_ids, id_col, "left_anti")
-            if min_latin_fraction is not None:
-                ok_ids = current.select(
-                    id_col, *text.script_profile(F.col("text"))
-                ).filter(F.col("frac_latin") >= min_latin_fraction)
-                current = current.join(ok_ids.select(id_col), id_col, "left_semi")
-            return current.withColumn(
+            return _fold(clean_stages, rel).withColumn(
                 "content_hash", text.fingerprint_md5(F.col("text"))
             )
 
@@ -2027,76 +1907,17 @@ def run_incremental_crawl_ingest(
                 F.broadcast(hash_present), "content_hash", "left_anti"
             )
 
-        accepted = _stable(
-            deduped.select(
-                F.col(id_col).alias("doc_id"),
-                "text",
-                text.lang_id(F.col("text")).alias("lang"),
-                F.col("domain").alias("source"),
-                F.length("text").cast("long").alias("n_chars"),
-                "url_canonical",
-                "domain",
-                "content_hash",
-            )
+        accepted = _stable(_documents_table(deduped, id_col, "content_hash"))
+        n_accepted = f.stats["n_accepted"] = accepted.count()
+
+        # drift vs the PRE-append state via the persisted token index
+        # (see _TokenIndex); a state built before the token-index era is
+        # backfilled ONCE from the accepted docs
+        tokens = _TokenIndex(
+            spark, token_index, docs_path, ("acc", "upd"), drift_report,
+            has_corpus=has_state,
         )
-        n_accepted = accepted.count()
-
-        # drift vs the PRE-append state, via the persisted token index —
-        # the batch's unigram counts join the vocab-sized index, so the
-        # per-batch drift cost is O(batch + vocab) and accepted text is
-        # NEVER re-read (the function's core invariant). The index is
-        # maintained whenever it exists OR drift_report is on, so a
-        # later flag-off call cannot silently let it go stale. A state
-        # built before the token-index era is backfilled ONCE from the
-        # accepted docs (the only O(corpus) token pass the index ever
-        # costs) — same staged write + rename swap as the url-index
-        # migration above.
-        drift_row = None
-        batch_counts = None
-        from eligibility_etl_airflow_spark.operators import drift as drift_ops
-
-        maintain_tokens = (
-            drift_report
-            or os.path.exists(token_index)
-            or drift_ops.token_index_has_pending(token_index)
-        )
-        if maintain_tokens:
-            import uuid as _uuid
-
-            # recovery first: a prior run that crashed between a state
-            # write and its index fold left a __pending intent — fold
-            # each kind now so the index is caught up BEFORE this
-            # batch's JSD reads it (idempotent via the per-kind _folded
-            # markers; applied only if that mutation actually reached
-            # the docs state; a mid-swap crash discards the intent and
-            # falls through to the backfill recount below)
-            for _kind in ("acc", "upd"):
-                drift_ops.token_index_fold(
-                    spark, token_index, docs_path=docs_path,
-                    verify_landed=True, kind=_kind,
-                )
-
-            if has_state and not os.path.exists(token_index):
-                backfill = drift_ops.unigram_counts(
-                    spark.read.parquet(docs_path).select("text")
-                )
-                tmp = f"{token_index}__backfill_{_uuid.uuid4().hex[:8]}"
-                backfill.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, token_index)
-            if n_accepted:
-                batch_counts = _stable(
-                    drift_ops.unigram_counts(accepted.select("text"))
-                )
-            if drift_report and batch_counts is not None and os.path.exists(
-                token_index
-            ):
-                drift_row = (
-                    drift_ops.js_divergence_counts(
-                        batch_counts, spark.read.parquet(token_index)
-                    )
-                    .collect()[0]
-                    .asDict()
-                )
+        batch_counts, drift_stats = tokens.batch_drift(accepted, n_accepted)
 
         # update path: re-crawled URLs whose CLEANED content changed
         # replace their accepted doc in place; computed (and _stable'd)
@@ -2105,76 +1926,46 @@ def run_incremental_crawl_ingest(
         if recrawls_src is not None:
             idx = spark.read.parquet(url_index)
             updated = _stable(
-                clean(recrawls_src)
-                .join(
-                    idx.select(
-                        "url_canonical", F.col("content_hash").alias("_old")
-                    ),
-                    "url_canonical",
-                )
-                .filter(F.col("content_hash") != F.col("_old"))
-                .select(
-                    F.col(id_col).alias("doc_id"),
-                    "text",
-                    text.lang_id(F.col("text")).alias("lang"),
-                    F.col("domain").alias("source"),
-                    F.length("text").cast("long").alias("n_chars"),
-                    "url_canonical",
-                    "domain",
+                _documents_table(
+                    clean(recrawls_src)
+                    .join(
+                        idx.select(
+                            "url_canonical", F.col("content_hash").alias("_old")
+                        ),
+                        "url_canonical",
+                    )
+                    .filter(F.col("content_hash") != F.col("_old")),
+                    id_col,
                     "content_hash",
                 )
             )
-            n_updated = updated.count()
+            n_updated = f.stats["n_updated"] = updated.count()
 
-        # token-count deltas for the update path, materialized BEFORE
+        # token-count deltas of the update path, materialized BEFORE
         # merge_upsert rewrites docs_path: the replaced documents' OLD
         # text leaves the corpus, so its counts must leave the index
-        # (else the index accretes ghost vocabulary). The old-text read
-        # piggybacks on the update path, which already rewrites
-        # docs_path wholesale — no new asymptotic cost.
-        upd_add = upd_sub = None
-        if maintain_tokens and n_updated:
-            upd_add = _stable(
-                drift_ops.unigram_counts(updated.select("text"))
-            )
-            upd_sub = _stable(
-                drift_ops.unigram_counts(
-                    spark.read.parquet(docs_path)
-                    .join(
+        # (else it accretes ghost vocabulary)
+        upd_deltas = None
+        if tokens.maintain and n_updated:
+            upd_deltas = {
+                "add": tokens.counts(updated),
+                "subtract": tokens.counts(
+                    spark.read.parquet(docs_path).join(
                         updated.select("url_canonical"),
                         "url_canonical",
                         "left_semi",
                     )
-                    .select("text")
-                )
-            )
-
+                ),
+            }
         # write-ahead token-delta intents BEFORE any state write: a
         # crash between a write below and its fold is then recoverable
         # on the next ingest (the replay accepts nothing, so without
         # this staging the fold input would be lost and the index
-        # permanently stale). The accepted-appends deltas and the
-        # update-merge deltas are SEPARATE intents because those writes
-        # land at different times — one combined intent could fold the
-        # un-landed half after a crash between them, then fold it again
-        # on replay.
-        if maintain_tokens and batch_counts is not None:
-            drift_ops.token_index_pending_write(
-                token_index,
-                drift_ops.batch_content_key(("acc", accepted)),
-                add=batch_counts,
-                ids=accepted.select("doc_id"),
-                kind="acc",
-            )
-        if maintain_tokens and n_updated:
-            drift_ops.token_index_pending_write(
-                token_index,
-                drift_ops.batch_content_key(("upd", updated)),
-                add=upd_add,
-                subtract=upd_sub,
-                ids=updated.select("doc_id"),
-                kind="upd",
-            )
+        # permanently stale)
+        if batch_counts is not None:
+            tokens.stage("acc", accepted, batch_counts)
+        if upd_deltas is not None:
+            tokens.stage("upd", updated, **upd_deltas)
 
         # appends AFTER the _stable: each write refreshes its path, and
         # an un-checkpointed lineage reading these paths would lazily
@@ -2219,48 +2010,22 @@ def run_incremental_crawl_ingest(
         # fold the staged deltas into the token index LAST, mirroring
         # exactly what the writes above did to docs_path (accepted
         # appended, updated replaced): counts + accepted + new_updated −
-        # old_updated, zero-count rows dropped. O(vocab + batch) work;
-        # each fold consumes its __pending intent, staged write + rename
-        # with the batch key recorded inside the index directory — so a
-        # crash anywhere in this window is healed by the recovery folds
-        # at the next ingest, exactly once per kind. A replayed batch
-        # stages nothing and the folds are no-ops (in-process folds skip
-        # the landed check — the writes above just ran)
-        if maintain_tokens:
-            drift_ops.token_index_fold(spark, token_index, kind="acc")
-            drift_ops.token_index_fold(spark, token_index, kind="upd")
-    finally:
-        for c in caches:
-            c.unpersist()
+        # old_updated, zero-count rows dropped, O(vocab + batch)
+        tokens.fold()
     # between-batches index compaction (see run_incremental_curation):
     # appends/merges/folds have landed, caches are gone, token index
-    # excluded (self-compacting per fold); same defensive WAL guard
-    compacted = (
-        {}
-        if drift_ops.token_index_has_pending(token_index)
-        else _maybe_compact_state_indexes(
-            spark, [docs_path, url_index, hash_index], compact_threshold
-        )
+    # excluded (self-compacting per fold)
+    compacted = _maybe_compact_state_indexes(
+        spark, state_paths, compact_threshold, token_index
     )
-    stats = {
-        "n_batch": n_batch,
-        "n_new_urls": n_new_urls,
-        "n_accepted": n_accepted,
-        # same id-reuse detector as run_incremental_curation: rows the
-        # stages accepted but the doc_id-keyed corpus append skipped
-        "n_id_reuse_skipped": n_accepted - n_docs_appended,
-        "n_total_accepted": spark.read.parquet(docs_path).count(),
-    }
+    # same id-reuse detector as run_incremental_curation: rows the
+    # stages accepted but the doc_id-keyed corpus append skipped
+    f.stats["n_id_reuse_skipped"] = n_accepted - n_docs_appended
+    f.stats["n_total_accepted"] = spark.read.parquet(docs_path).count()
     if compacted:
-        stats["compacted_indexes"] = compacted
-    if n_after_robots is not None:
-        stats["n_after_robots"] = n_after_robots
-    if n_updated is not None:
-        stats["n_updated"] = n_updated
-    if drift_row is not None:
-        stats["batch_js_divergence"] = drift_row["js_divergence"]
-        stats["batch_vocab_shared"] = drift_row["vocab_shared"]
-    return stats
+        f.stats["compacted_indexes"] = compacted
+    f.stats.update(drift_stats)
+    return f.stats
 
 
 def run_crawl_frontier_pipeline(
@@ -2561,7 +2326,6 @@ def run_incremental_frontier(
     Extra ``frontier_kwargs`` pass through (robots_df, sitemaps_df,
     domain_quality_df, per_domain_budget, ...)."""
     from eligibility_etl_airflow_spark.operators import urls
-    from eligibility_etl_airflow_spark.operators.components import _stable
 
     edges_path = os.path.join(state_dir, "index_domain_edges")
     ranks_path = os.path.join(state_dir, "frontier_ranks")

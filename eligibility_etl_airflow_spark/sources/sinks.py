@@ -37,7 +37,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
@@ -299,18 +298,6 @@ def resume_filter_bloom(
     done = spark.read.parquet(sink_path).select(key)
     survivors = candidates.join(done, key, "left_anti")
     return definite_new.unionByName(survivors), sketch
-
-
-def keep_last(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
-    """Deterministic keep-last dedup: pandas ``drop_duplicates(keep='last')``
-    depends on row order (dags/eligibilty_etl.py:146); the engine demands
-    an explicit ordering column (SURVEY.md §7.8)."""
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 class QualityGateError(ValueError):

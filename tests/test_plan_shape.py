@@ -741,3 +741,53 @@ def test_python_signature_stages_are_parallelized(spark, sf_dir):
             "signature/synth/encode work would run single-threaded on a "
             "narrow scan (ensure_parallelism dropped?)"
         )
+
+
+# Spark jobs per funnel run at sf0.01, the most measured before the
+# funnels shared one stage loop (curation launches 60 or 61 from run to
+# run, crawl preprocess 31): a stage that quietly adds a count() (e.g. on
+# curation's neardup_removal snapshot, persisted but deliberately not
+# counted because n_curated comes from the sink footers) breaks the budget.
+FUNNEL_JOB_BUDGET = {"curation": 61, "crawl_preprocess": 31}
+
+
+def test_funnel_job_counts_stay_on_budget(spark, sf_dir, tmp_path):
+    import os
+
+    from pyspark.sql import functions as F
+
+    from eligibility_etl_airflow_spark import pipelines
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        spark.catalog.clearCache()
+        sc.setJobGroup(group, group, False)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    raw = Catalog(spark, sf01).documents.select(
+        "doc_id",
+        F.concat(
+            # ids past 450 repeat an earlier page's URL
+            F.lit("https://www.s"), F.col("doc_id") % 450 % 7,
+            F.lit(".example.com/p/"), F.col("doc_id") % 450,
+        ).alias("url"),
+        F.concat(
+            F.lit("<html><body><div>NAV</div><p>"), "text", F.lit("</p></body></html>")
+        ).alias("html"),
+    )
+    got = {
+        "curation": jobs("funnel-curation", lambda: pipelines.run_corpus_curation_pipeline(
+            spark, sf01, str(tmp_path / "cur"))),
+        "crawl_preprocess": jobs("funnel-crawl", lambda: pipelines.run_crawl_preprocess_pipeline(
+            spark, raw, str(tmp_path / "crawl"),
+            quarantine_path=str(tmp_path / "quarantine"))),
+    }
+    over = {k: n for k, n in got.items() if n > FUNNEL_JOB_BUDGET[k]}
+    assert not over, f"jobs over budget {FUNNEL_JOB_BUDGET}: {over}"

@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from eligibility_etl_airflow_spark.operators.dedup import keep_last
 from eligibility_etl_airflow_spark.sources import sinks
 
 
@@ -86,8 +87,22 @@ def test_resume_filter_skips_processed(spark, target):
 
 def test_keep_last_requires_explicit_order(spark):
     df = _df(spark, [(1, "old", 1), (1, "new", 2), (2, "only", 1)])
-    got = {r.k: r.v for r in sinks.keep_last(df, ["k"], "ord").collect()}
+    got = {r.k: r.v for r in keep_last(df, ["k"], [F.col("ord")]).collect()}
     assert got == {1: "new", 2: "only"}
+
+
+def test_keep_last_tie_winner_is_order_independent(spark):
+    """Rows tied on the primary order column are broken by the trailing
+    order columns, so the winner does not depend on the input row order
+    or the partition count."""
+    rows = [(1, v, 5) for v in ("b", "d", "a", "c")] + [(1, "z", 4), (2, "x", 1), (2, "y", 1)]
+    winners = set()
+    for perm in (rows, rows[::-1], rows[2:] + rows[:2]):
+        for n_parts in (1, 3, 7):
+            df = _df(spark, perm).repartition(n_parts)
+            got = keep_last(df, ["k"], [F.col("ord"), F.col("v")]).collect()
+            winners.add(tuple(sorted((r.k, r.v) for r in got)))
+    assert winners == {((1, "d"), (2, "y"))}
 
 
 def test_expect_passes_and_raises(spark):

@@ -77,6 +77,9 @@ def test_xxh64_u8mat_empty_and_zero_rows():
     assert h_empty.shape == (1,)
     assert h_empty[0] != 0
     assert xxh64_u8mat(np.empty((0, 5), dtype=np.uint8)).shape == (0,)
+    # a 1-D array is not n empty rows: it must be rejected, not hashed
+    with pytest.raises(ValueError):
+        xxh64_u8mat(np.frombuffer(b"abc", dtype=np.uint8))
 
 
 def test_xxh64_seed_parameter(spark):
